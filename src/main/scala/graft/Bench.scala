@@ -6,7 +6,9 @@ import graft.operators.InvertedIndex
 
 /** Driver-run benchmark: times the headline queries at the given scale
   * factor on a local[32] session and prints ONE JSON line
-  * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
+  * `{"metric":…,"value":…,"failed":[…],"unit":"sec","queries":{…},"sf":…}`.
+  * A query that throws is named in `failed`; the line then carries
+  * `"value":null` and the run exits 1.
   *
   * Headline set = the reference's own query (q01) + the relational
   * core shapes (agg, joins, window, top-k) + the LLM-pipeline
@@ -263,7 +265,14 @@ object Bench {
     val qs = jmap(_.min)
     val medians = jmap(_.median)
     val spreads = jmap(_.spread, d => f"$d%.3f")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
+    // a failed query (-1) has no time: a record with one carries no
+    // total (a smaller one would read as a speedup), names it, and the
+    // run exits non-zero
+    val failed = (results.collect { case (k, t) if t.min < 0 => k } ++
+      fullResults.collect { case (k, v, _) if v < 0 => k }).distinct.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total: Option[Double] =
+      if (failed.isEmpty) Some(results.map(_._2.min).sum) else None
     // q27's wall-time is dominated by its OUTPUT size (the synthetic
     // corpus is near-dup-heavy: ~2.8M candidate pairs at sf0.1, ~570×
     // the 5k input docs) — report the count, outside the timed region,
@@ -325,7 +334,7 @@ object Bench {
     }).distinct.sorted
     val regressedJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val contended = contendedStart || nAdjudications >= 4
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"median":$medians,"spread":$spreads$fullJson$adjJson$headAdjJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"load_wait_sec":${f"$loadWaitSec%.1f"},"adjudications":$nAdjudications,"outliers_135":$outliers135,"regressed":$regressedJson,"prev_sf_mismatch":$prevSfMismatch,"contended":$contended}"""
+    val json = s"""{"metric":"total","value":${total.getOrElse("null")},"failed":$failedJson,"unit":"sec","queries":$qs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"median":$medians,"spread":$spreads$fullJson$adjJson$headAdjJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"load_wait_sec":${f"$loadWaitSec%.1f"},"adjudications":$nAdjudications,"outliers_135":$outliers135,"regressed":$regressedJson,"prev_sf_mismatch":$prevSfMismatch,"contended":$contended}"""
     // The FULL record (medians, spreads, the 60+-entry full-inventory map)
     // is several KB — longer than the driver's stdout tail window, which is
     // why BENCH_r04/r05 recorded `parsed: null`. So: the full record goes to
@@ -334,12 +343,17 @@ object Bench {
     // always survive the tail capture whole.
     val compactQs = results.map { case (k, t) => f""""$k":${t.min}%.3f""" }
       .mkString("{", ",", "}")
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$compactQs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"adjudicated":$nAdjudications,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"contended":$contended,"full":"BENCH_LAST.json"}"""
+    val compactTotal = total.map(t => f"$t%.3f").getOrElse("null")
+    val compact = f"""{"metric":"total","value":$compactTotal,"failed":$failedJson,"unit":"sec","queries":$compactQs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"adjudicated":$nAdjudications,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"contended":$contended,"full":"BENCH_LAST.json"}"""
     System.err.println(json)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: java.io.IOException => () } // full record still on stderr
     println(compact) // LAST stdout line — the one the driver parses
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.length} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

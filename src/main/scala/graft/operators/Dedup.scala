@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.TextFunctions
 
@@ -733,15 +734,23 @@ object Dedup {
     // size estimate) and the quadratic fanout then runs at the SCAN's
     // split count instead of the shuffle parallelism. The two sides are
     // canonically identical, so they share ONE reused exchange on shingle.
-    a.hint("shuffle_hash").join(b, "shingle")
+    keepJaccard(a.hint("shuffle_hash").join(b, "shingle")
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"), first("sz_a").as("sz_a"), first("sz_b").as("sz_b"))
+      .agg(count(lit(1)).as("inter"), first("sz_a").as("sz_a"), first("sz_b").as("sz_b")),
+      theta)
+  }
+
+  /** Scores counted pairs `(doc_a, doc_b, inter, sz_a, sz_b)`: jacc =
+    * round4(inter / (sz_a + sz_b − inter)), kept when jacc ≥ θ. The one
+    * place that decides a pair for both counting variants
+    * ([[ngramJaccardPairs]] and [[ngramJaccardPairsBrute]]). */
+  private def keepJaccard(counted: DataFrame, theta: Double): DataFrame =
+    counted
       .withColumn("jacc",
         TextFunctions.round4(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter"))))
       .filter(col("jacc") >= theta)
       .select("doc_a", "doc_b", "jacc")
-  }
 
   /** Exact n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin,
     * Bayardo et al. WWW'07 / Chaudhuri et al. ICDE'06): identical output
@@ -864,109 +873,119 @@ object Dedup {
       .agg(min(idCol).as("keep_id"))
   }
 
-  /** Exact n-gram Jaccard pairs by BRUTE FORCE: a broadcast
-    * nested-loop join whose condition is the native single-merge-pass
-    * [[graft.plans.TextSketchExprs.SortedJaccardExpr]] over per-doc
-    * sorted shingle arrays. Identical output to [[ngramJaccardPairs]]
-    * (spec-asserted); deliberately O(n²) in document count — but with
-    * no shuffle at all and a per-pair cost of one array merge, so its
-    * constants are tiny. Guarded: corpora above [[bruteDocCap]] fall
-    * back to [[ngramJaccardPairsPrefix]] (identical output) instead of
-    * attempting an over-limit broadcast.
+  /** Exact n-gram Jaccard pairs from an in-memory INVERTED INDEX over
+    * the corpus's hashed shingles (the paper's word → documents job,
+    * run as one kernel). Identical output to [[ngramJaccardPairs]]
+    * (spec-asserted), with no exchange of exploded shingle rows:
+    *  - one narrow pass hashes (xxhash64) and sorts each document's
+    *    distinct shingles and is pinned; the driver collects it and
+    *    builds a [[ShingleIndex]] (dense term ids, posting lists of doc
+    *    indices in id order), broadcast once;
+    *  - each task takes every T-th probe document and counts |a∩b| for
+    *    every later document b by walking a's posting lists into an int
+    *    counter, then emits `(doc_a, doc_b, inter, sz_a, sz_b)`;
+    *  - [[keepJaccard]] scores and keeps each pair, the same Column
+    *    expression as [[ngramJaccardPairs]].
     *
-    * Which of the three exact variants to use is a corpus property,
-    * all measured at sf0.1 (n=2, θ=0.3):
-    *  - DENSE similarity / small vocabulary (this synthetic corpus:
-    *    every doc pair shares shingles): the self-join's candidate
-    *    fanout Σ_s df(s)² is itself ~quadratic (~60M intermediate rows
-    *    through a shuffle) — brute force wins big: 8.5 s → ~1 s, and
-    *    the broadcast side is one narrow array column, not the corpus.
-    *  - ZIPFIAN vocabulary (natural language at scale):
-    *    [[ngramJaccardPairsPrefix]] (rare-token candidates only) wins
-    *    asymptotically; [[ngramJaccardPairs]] is output-sensitive
-    *    middle ground.
-    *  - At 100 TB, none of these: exact all-pairs at any cost model is
-    *    the wrong tool — use MinHash LSH candidates + [[jaccardRefine]]
-    *    (the q66 pipeline). Brute force additionally requires the
-    *    smaller relation to fit in a broadcast (~10M docs × ~50
-    *    shingles is already >8 GB — it is a small-corpus tool).
+    * The work is Σ_s df(s)²/2 counter increments, never more than one
+    * array merge per document pair (Σ_pairs |a∩b| ≤ Σ_pairs |a| + |b|)
+    * and independent of θ. On dense, small-vocabulary corpora (the
+    * synthetic test corpus: 3000 sf0.1 documents share 931 distinct
+    * 2-shingles, median df 171) that is 13 M increments against 4.5 M
+    * merges of ~100 steps; the PPJoin prefix and positional filters
+    * would still keep half of the pairs there. Hashing keeps it exact
+    * w.h.p. ([[jaccardRefine]]'s budget); a 64-bit collision inside one
+    * document counts exactly as the sorted merge does.
+    *
+    * Ids must be an integral column. Guarded: corpora above
+    * [[bruteDocCap]] documents or [[bruteShingleCap]] total shingles
+    * fall back to [[ngramJaccardPairsPrefix]] (identical output), whose
+    * rare-token candidate join is the Zipfian / 100 TB shape. At 100 TB
+    * exact all-pairs is the wrong tool anyway — use MinHash LSH
+    * candidates + [[jaccardRefine]] (the q66 pipeline).
     */
   def ngramJaccardPairsBrute(docs: DataFrame, idCol: String, textCol: String,
       n: Int, theta: Double): DataFrame =
     ngramJaccardPairsBruteCapped(docs, idCol, textCol, n, theta,
       bruteDocCap, bruteShingleCap)
 
-  /** Compute cap for [[ngramJaccardPairsBrute]]: at 100k docs the n²/2
-    * merge-pass loop is ~5×10⁹ pair merges — minutes parallelized, the
-    * outer edge of "tractable by brute force". r16 (r15 verdict "what's
-    * wrong" #2): lowered from 250k, where n²/2 ≈ 3×10¹⁰ merges is hours
-    * of CPU even spread over a cluster. Beyond it the call transparently
-    * degrades to [[ngramJaccardPairsPrefix]] (identical output,
-    * spec-asserted), so a caller who wired brute force against a small
-    * corpus doesn't hang when the corpus grows. */
+  /** Document cap for [[ngramJaccardPairsBrute]]: on a dense corpus the
+    * counting kernel still touches every document pair that shares a
+    * shingle — at 100k docs up to 5×10⁹ pairs, the outer edge of what
+    * one pass of int increments finishes in minutes. Beyond it the call
+    * transparently degrades to [[ngramJaccardPairsPrefix]] (identical
+    * output, spec-asserted), so a caller who wired the kernel against a
+    * small corpus doesn't hang when the corpus grows. */
   val bruteDocCap: Long = 100000L
 
-  /** Broadcast-safety cap for [[ngramJaccardPairsBrute]], in TOTAL
-    * hashed shingles across the corpus: 16M × 8 B ≈ 128 MB of longs
-    * (~2-3× that with array headers) — comfortably inside Spark's 8 GB
-    * broadcast hard limit and typical driver heaps. r16 (r15 verdict
-    * "what's wrong" #2): the doc-count cap alone assumed ~50
-    * shingles/doc; a long-document corpus (200k docs × 5k shingles ≈
-    * 8 GB of longs) passed the doc gate while blowing the broadcast.
-    * Probed with one bounded narrow pass (sum of shingle counts — no
-    * hashing, no sort, no text broadcast). */
+  /** Driver-memory cap for [[ngramJaccardPairsBrute]], in TOTAL hashed
+    * shingles across the corpus: the collected arrays are 8 B per
+    * shingle, the build sorts one more copy of them, and the broadcast
+    * index holds a term id and a posting (8 B) per shingle: 16M
+    * shingles is ~400 MB of driver heap while building and ~128 MB
+    * broadcast. The doc-count cap alone would let a long-document corpus
+    * (200k docs × 5k shingles) through. Probed with one aggregate over
+    * the pinned shingle arrays before anything is collected. */
   val bruteShingleCap: Long = 16000000L
 
   private[graft] def ngramJaccardPairsBruteCapped(docs: DataFrame, idCol: String,
       textCol: String, n: Int, theta: Double, maxDocs: Long,
       maxShingles: Long = Long.MaxValue): DataFrame = {
     require(theta > 0.0, "theta must be positive (theta=0 would emit every doc pair)")
+    val idType = docs.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"the index kernel needs integral ids, got $idCol: ${idType.simpleString}")
     // limit-probe, not count(): scanning stops as soon as maxDocs+1 ids
     // are seen, so the guard costs one bounded column-pruned pass
     val probe = docs.select(col(idCol)).limit((maxDocs + 1).toInt).count()
     if (probe > maxDocs)
       return ngramJaccardPairsPrefix(docs, idCol, textCol, n, theta)
-    // hashed + sorted once per doc: the broadcast table packs primitive
-    // longs (a fraction of the string arrays' footprint against the 8 GB
-    // broadcast limit) and the n²-evaluated jaccard is the single-branch
-    // long merge (exact w.h.p., [[jaccardRefine]]'s budget).
-    // PERSISTED (intra-call cache, auto-released by the ContextCleaner
-    // once the result frame is dropped): the shingle pass (normalize +
-    // shingle + distinct + hash + sort) used to run once per join side;
-    // the broadcast-footprint probe below now materializes it ONCE and
-    // both sides read the cache — the probe is free and the tokenize
-    // pass count drops from 2 to 1. The cpuBound rebalance moves INSIDE
-    // the cache (it must run before persist twice over: a small parquet
-    // input arrives as 1-2 splits, which would pin the whole n² stream
-    // loop to as many cores — measured 28 s vs ~2 s at sf0.1 — and
-    // Dataset.inputFiles reads the OPTIMIZED plan, where the cache
-    // substitution has already swallowed the file scan, so a
-    // post-persist cpuBound sees zero files and skips the rebalance)
-    val sets = graft.sources.Balance.cpuBound(docs
-        .select(col(idCol).as("doc_id"),
-          sort_array(transform(shingleArray(textCol, n), s => xxhash64(s))).as("ss"))
-        // shingle-less docs can never reach a positive theta; dropping
-        // them here also matches the self-join variants (no shared
-        // shingle → no pair)
-        .filter(size(col("ss")) > 0))
+    // PERSISTED so the shingle pass (normalize + shingle + distinct +
+    // hash + sort) runs once for the footprint probe and the collect.
+    // No rebalance: the kernel's parallelism is its own task count, not
+    // this relation's partitioning, and an exchange here would only add
+    // a job
+    val sets = docs
+      .select(col(idCol).as("doc_id"),
+        sort_array(transform(shingleArray(textCol, n), s => xxhash64(s))).as("ss"))
+      // shingle-less docs can never reach a positive theta, and a null
+      // id never pairs (as under a `<` condition)
+      .filter(col("doc_id").isNotNull && size(col("ss")) > 0)
       .persist()
-    // second gate, on the BROADCAST footprint (r15 verdict: the doc cap
-    // alone assumed ~50 shingles/doc — a long-document corpus could
-    // pass it while blowing the 8 GB broadcast limit)
     val totalShingles = sets
       .agg(coalesce(sum(size(col("ss"))), lit(0L))).head.getLong(0)
     if (totalShingles > maxShingles) {
       sets.unpersist()
       return ngramJaccardPairsPrefix(docs, idCol, textCol, n, theta)
     }
-    // the stream side drives the n² loop across the cache's (already
-    // rebalanced) partitions
-    val a = sets.select(col("doc_id").as("doc_a"), col("ss").as("ss_a"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("ss").as("ss_b"))
-    def jacc = TextFunctions.round4(
-      graft.plans.TextSketchExprs.jaccardSorted(col("ss_a"), col("ss_b")))
-    a.join(broadcast(b), col("doc_a") < col("doc_b") && jacc >= theta)
-      .select(col("doc_a"), col("doc_b"), jacc.as("jacc"))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val collected = sets.select(col("doc_id").cast("long"), col("ss"))
+      .as[(Long, Array[Long])].collect()
+    sets.unpersist()
+    val index = spark.sparkContext.broadcast(
+      ShingleIndex(collected.map(_._1), collected.map(_._2)))
+    val tasks = math.max(1, math.min(spark.sparkContext.defaultParallelism, collected.length))
+    // a pair below θ by two rounding steps can never round up to θ, so
+    // it is not worth a row; keepJaccard still decides every pair
+    val floorJ = theta - 2e-4
+    val counted = spark.sparkContext.parallelize(0 until tasks, tasks).mapPartitions { it =>
+      val ix = index.value
+      val counter = new Array[Int](ix.numDocs)
+      val touched = new Array[Int](ix.numDocs)
+      // probes interleave across tasks: a probe's work shrinks with its
+      // position (it counts only later docs), so strides balance it
+      it.flatMap(t => Iterator.range(t, ix.numDocs, tasks).flatMap { a =>
+        val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int, Int)]
+        ix.probe(a, floorJ, counter, touched) { (b, inter) =>
+          out += ((ix.ids(a), ix.ids(b), inter, ix.size(a), ix.size(b)))
+        }
+        out
+      })
+    }.toDF("doc_a", "doc_b", "inter", "sz_a", "sz_b")
+    keepJaccard(counted, theta)
+      .select(col("doc_a").cast(idType).as("doc_a"), col("doc_b").cast(idType).as("doc_b"),
+        col("jacc"))
   }
 
   /** CROSS-DOCUMENT chunk deduplication (the CCNet paragraph-dedup

@@ -220,9 +220,9 @@ object TextSketchExprs {
     * `array<bigint>`, for pre-hashed shingles) columns via a single
     * merge pass — no per-pair hash-set build, no intermediate array
     * (contrast `array_intersect`, which allocates a set and an output
-    * array per call). Built as a join-condition predicate: inside a
-    * brute-force similarity join this evaluates once per row PAIR, so
-    * it is the innermost loop of the whole operator. Inputs MUST be
+    * array per call). The refine stages ([[graft.operators.Dedup.jaccardRefine]],
+    * [[graft.operators.Dedup.weightedJaccardRefine]]) evaluate it once
+    * per candidate PAIR, so it is their innermost loop. Inputs MUST be
     * sorted ascending (UTF8 binary order / signed long order — both
     * `sort_array`'s order) and de-duplicated (`array_distinct`) — the
     * caller's contract, asserted cheap (both-empty → 0.0, never NaN).

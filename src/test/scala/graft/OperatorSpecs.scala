@@ -265,6 +265,116 @@ class DedupSpec extends SparkSuite {
       }
     }
   }
+
+  // ---- the index kernel behind ngramJaccardPairsBrute ----
+
+  private def pairRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    df.select(col("doc_a").cast("long"), col("doc_b").cast("long"), col("jacc"))
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+  }
+
+  private def assertKernelMatchesNaive(corpus: org.apache.spark.sql.DataFrame, n: Int,
+      theta: Double): Seq[(Long, Long, Double)] = {
+    val naive = pairRows(Dedup.ngramJaccardPairs(corpus, "doc_id", "text", n, theta))
+    val kernel = pairRows(Dedup.ngramJaccardPairsBrute(corpus, "doc_id", "text", n, theta))
+    assert(kernel === naive, s"kernel != naive at n=$n theta=$theta")
+    kernel
+  }
+
+  test("index kernel == naive self-join, row for row, on dense random corpora") {
+    import spark.implicits._
+    val vocab = Seq("ant", "bee", "cat", "dog", "eel", "fox", "gnu", "hen")
+    val rnd = new scala.util.Random(20260417)
+    val corpus = (1 to 240).map { i =>
+      (i.toLong, Seq.fill(3 + rnd.nextInt(14))(vocab(rnd.nextInt(vocab.length))).mkString(" "))
+    }.toDF("doc_id", "text").cache()
+    for (n <- Seq(1, 2); theta <- Seq(0.05, 0.3, 0.7)) {
+      val got = assertKernelMatchesNaive(corpus, n, theta)
+      assert(got.nonEmpty, s"degenerate empty result at n=$n theta=$theta")
+    }
+    corpus.unpersist()
+  }
+
+  test("index kernel counts a repeated hash like the sorted merge does") {
+    import spark.implicits._
+    // two distinct shingles colliding in 64 bits leave one value twice in
+    // a document's sorted array; the merge counts min(copies) per value
+    // and sizes by array length. A tiny value range makes repeats common.
+    val rnd = new scala.util.Random(5)
+    val sets = Array.fill(60)(Array.fill(50 + rnd.nextInt(250))(rnd.nextInt(40).toLong - 20).sorted)
+    assert(sets.exists(s => s.distinct.length < s.length))
+    val ids = sets.indices.map(i => 3L * i - 50).toArray
+    val ix = graft.operators.ShingleIndex(ids, sets)
+    val counter = new Array[Int](ix.numDocs)
+    val touched = new Array[Int](ix.numDocs)
+    val inter = collection.mutable.Map.empty[(Long, Long), Int]
+    for (a <- 0 until ix.numDocs) {
+      assert(ix.size(a) === sets(ids.indexOf(ix.ids(a))).length)
+      ix.probe(a, 0.0, counter, touched) { (b, i) => inter((ix.ids(a), ix.ids(b))) = i }
+    }
+    assert(counter.forall(_ == 0), "probe must leave the counter zeroed")
+    val byId = ids.zip(sets).toMap
+    val expect = (for (a <- ids; b <- ids if a < b) yield (a, b, byId(a).toSeq, byId(b).toSeq))
+      .toSeq.toDF("a", "b", "sa", "sb")
+      .select(col("a"), col("b"),
+        graft.plans.TextSketchExprs.jaccardSorted(col("sa"), col("sb")).as("j"))
+      .as[(Long, Long, Double)].collect()
+    for ((a, b, j) <- expect) {
+      val got = inter.get((a, b))
+        .map(i => i.toDouble / (byId(a).length + byId(b).length - i)).getOrElse(0.0)
+      assert(got === j, s"pair ($a, $b)")
+    }
+  }
+
+  test("index kernel: negative, non-contiguous and unordered doc ids") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1000000000000L, "red green blue cyan"),
+      (-7L, "red green blue cyan"),
+      (42L, "red green blue magenta"),
+      (-3000000000L, "red green blue cyan"),
+      (5L, "olive teal navy")).toDF("doc_id", "text")
+    val got = assertKernelMatchesNaive(corpus, 1, 0.5)
+    assert(got === Seq((-3000000000L, -7L, 1.0), (-3000000000L, 42L, 0.6),
+      (-3000000000L, 1000000000000L, 1.0), (-7L, 42L, 0.6), (-7L, 1000000000000L, 1.0),
+      (42L, 1000000000000L, 0.6)))
+    // an INT id column keeps its type
+    val intIds = corpus.filter(col("doc_id").between(-10, 100))
+      .select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val typed = Dedup.ngramJaccardPairsBrute(intIds, "doc_id", "text", 1, 0.5)
+    assert(typed.schema("doc_a").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(pairRows(typed) === Seq((-7L, 42L, 0.6)))
+  }
+
+  test("index kernel: a single document and shingle-less documents emit nothing") {
+    import spark.implicits._
+    val single = Seq((1L, "only one document here")).toDF("doc_id", "text")
+    assert(assertKernelMatchesNaive(single, 2, 0.05).isEmpty)
+    // null text, empty text and one-word docs have no 2-shingles
+    val mixed = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "lonely"), (4L, "lonely"),
+      (5L, "same words again"), (6L, "same words again")).toDF("doc_id", "text")
+    assert(assertKernelMatchesNaive(mixed, 2, 0.05) === Seq((5L, 6L, 1.0)))
+    val none = mixed.filter(col("doc_id") <= 4)
+    assert(assertKernelMatchesNaive(none, 2, 0.05).isEmpty)
+  }
+
+  test("index kernel: tasks whose probes emit nothing") {
+    import spark.implicits._
+    // eight docs over the suite's four tasks; only docs 1 and 2 pair, so
+    // the tasks holding the other probes emit no row
+    val corpus = (Seq((1L, "near dup text"), (2L, "near dup text")) ++
+      (3L to 8L).map(i => (i, s"unique${('a' + i).toChar} words${('a' + i).toChar}")))
+      .toDF("doc_id", "text")
+    assert(assertKernelMatchesNaive(corpus, 1, 0.3) === Seq((1L, 2L, 1.0)))
+    val ix = graft.operators.ShingleIndex(Array(9L, 4L), Array(Array(1L, 2L), Array(2L, 3L)))
+    val emitted = collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val (counter, touched) = (new Array[Int](2), new Array[Int](2))
+    ix.probe(1, 0.0, counter, touched)((b, i) => emitted += ((b, i))) // id 9: nothing later
+    assert(emitted.isEmpty)
+    ix.probe(0, 0.0, counter, touched)((b, i) => emitted += ((b, i)))
+    assert(emitted.toSeq === Seq((1, 1)))
+  }
 }
 
 class SimilaritySpec extends SparkSuite {

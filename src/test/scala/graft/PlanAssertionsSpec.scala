@@ -162,8 +162,7 @@ class PlanAssertionsSpec extends SparkSuite {
     assert(!p.contains("SinglePartition"), s"no single-partition funnel allowed\n$p")
   }
 
-  test("brute pair stage (q63's) is a broadcast nested-loop with the native " +
-      "jaccard predicate in the condition") {
+  test("brute pair stage (q63's) runs the index kernel, not a nested loop") {
     // q63's own returned plan starts AFTER the eager CC loop (its input
     // is the final labels localCheckpoint), so assert on the pair stage
     // it is built from
@@ -171,19 +170,17 @@ class PlanAssertionsSpec extends SparkSuite {
       graft.sources.Tables(spark, sfDir, "documents"), "doc_id", "text",
       n = 2, theta = 0.3)
     val p = pairs.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    // the merge-pass expression must evaluate INSIDE the join (as its
-    // condition), not as a post-join filter over materialized pairs
-    assert(p.matches("(?s).*Join condition:[^\\n]*jaccard_sorted.*"), p)
-    // no exchange anywhere: broadcast + narrow maps only (the rebalance
-    // repartition is an exchange only when the scan is under-split;
-    // allow exactly that one — it lives INSIDE the persisted shingle
-    // relation, whose AQE subplan prints both a Final and an Initial
-    // view of the same exchange, so drop the "Initial Plan" rendering
-    // before counting)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // pairs are counted by the kernel, never merged in a join condition
+    assert(!p.matches("(?s).*Join condition:[^\\n]*jaccard_sorted.*"), p)
+    // no exchange: the shingle pass ran (and was collected) while the
+    // frame was built, and the kernel's counted pairs are scored by
+    // narrow maps. An AQE subplan prints both a Final and an Initial view
+    // of the same exchange, so drop the "Initial Plan" rendering before
+    // counting
     val dedup = p.split("== Initial Plan ==").head
     val exchanges = """(?<!Broadcast)Exchange \(\d+\)""".r.findAllIn(dedup).size
-    assert(exchanges <= 1, s"expected at most the rebalance exchange, got $exchanges\n$p")
+    assert(exchanges === 0, s"expected no exchange, got $exchanges\n$p")
   }
 
   test("q70: chunking is scan -> narrow ops -> one final sort (no join, no agg)") {
